@@ -14,6 +14,8 @@ md5(s) as a base-16 integer`` — 60 bits, positive, deterministic everywhere.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -40,18 +42,49 @@ def word_count(col: Column | str) -> Column:
     return F.size(words(col))
 
 
+def bind(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(v)`` with ``value`` evaluated ONCE per row and bound to the
+    lambda variable ``v``. Spark evaluates a lambda body once per array
+    element and Catalyst never hoists element-independent work out of it,
+    so an expensive column (a tokenizer) referenced inside a per-element
+    lambda is re-derived per element — O(n²) per row. Reading a bound
+    variable instead keeps it at one evaluation per row."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def shingles(col: Column | str, k: int = 3, distinct: bool = True) -> Column:
     """Word k-gram shingles; distinct=True gives the unit SET for
     Jaccard/MinHash dedup, distinct=False keeps multiplicity for frequency
     counts. Guarded for short docs (Spark's sequence(1,0) would DESCEND,
-    not return empty)."""
-    w = words(col)
-    n = F.size(w)
-    idx = F.sequence(F.lit(1), n - (k - 1))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, k)))
-    if distinct:
-        grams = F.array_distinct(grams)
-    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
+    not return empty). One tokenization per row: the gram lambda reads
+    the word array through a bound variable (``bind``), never the
+    tokenizer itself."""
+
+    def grams_of(w: Column) -> Column:
+        n = F.size(w)
+        idx = F.sequence(F.lit(1), n - (k - 1))
+        grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, k)))
+        if distinct:
+            grams = F.array_distinct(grams)
+        return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
+
+    return bind(words(col), grams_of)
+
+
+def adjacent_pairs(arr: Column, left: str, right: str) -> Column:
+    """Array of ``struct(arr[i] AS left, arr[i+1] AS right)`` over the
+    adjacent elements of ``arr``, with ``arr`` bound once per row. Callers
+    keep rows with size(arr) >= 2 (a shorter array gives sequence(1, 0),
+    which DESCENDS)."""
+    return bind(
+        arr,
+        lambda a: F.transform(
+            F.sequence(F.lit(1), F.size(a) - 1),
+            lambda i: F.struct(
+                F.element_at(a, i).alias(left), F.element_at(a, i + 1).alias(right)
+            ),
+        ),
+    )
 
 
 def h64(col: Column) -> Column:

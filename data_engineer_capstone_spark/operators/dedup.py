@@ -407,14 +407,16 @@ def minhash_lsh_pairs(
     # min over its set), and array_distinct's per-row O(n²) string scans are
     # 10× the cost of the whole shingle pass — set semantics are deferred to
     # the candidate-bounded verify stage below.
-    # Round-11 (guide §4.4's duplication trap, native-HOF edition):
-    # filtering on size() of the PROJECTED shingle column pushes a COPY of
-    # the whole shingle transform into the filter — the plan evaluated the
-    # gram construction twice per row (2× concat_ws subtrees, measured
-    # 5.2-9.7 s vs 0.7-1.0 s noop-sink for this stage at sf0.1). Filter on
-    # the cheap precondition instead: shingles(distinct=False) is empty
-    # IFF size(words) < k, so the kept rows are identical by construction
-    # and the heavy transform is evaluated exactly once.
+    # Rule: one tokenization per row, and the gram construction evaluated
+    # once. shingles() binds the word array to a lambda variable and the
+    # gram lambda reads that variable — a tokenizer referenced inside the
+    # lambda re-runs per gram (O(words²) per row), since Spark evaluates a
+    # lambda body per element and never hoists it. The filter follows the
+    # same rule: filtering on size() of the PROJECTED shingle column would
+    # push a COPY of the whole gram transform into the filter, so it
+    # filters on the precondition instead — shingles(distinct=False) is
+    # empty IFF size(words) < k, so the kept rows are identical by
+    # construction (one extra tokenization in the filter, no extra grams).
     base = slim.where(F.size(words(F.col(text_col))) >= k).select(
         F.col(id_col).alias("did"), shingles(text_col, k, distinct=False).alias("sh")
     )

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..materialize import materialize
 from ..catalog import load_table
-from ..functions.text import h64, word_count, words
+from ..functions.text import adjacent_pairs, h64, word_count, words
 from ..operators.dedup import jaccard_prefix_filter_pairs, minhash_lsh_pairs
 from ..sizing import expansion_partitions
 from .extensions import _H64, _WORDS, JACCARD_PAIRS_ORACLE, _minhash_ctes
@@ -374,14 +374,8 @@ def q241(spark: SparkSession, sf: str) -> DataFrame:
     ``-ln(C12/C1)`` is expressed here as the ratio: same ordering, same
     plan, none of the cross-libm hash risk); per-doc sums are integer."""
     docs = load_table(spark, sf, "documents")
-    w = words("text")
-    n = F.size(w)
-    bg = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.struct(
-            F.element_at(w, i).alias("w1"), F.element_at(w, i + 1).alias("w2")
-        ),
-    )
+    n = word_count("text")
+    bg = adjacent_pairs(words("text"), "w1", "w2")
     ex = (
         docs.where(n >= 2)
         .select("doc_id", F.explode(bg).alias("p"))
@@ -906,12 +900,7 @@ def q248(spark: SparkSession, sf: str) -> DataFrame:
     )
     cs = F.regexp_extract_all(F.col("word"), F.lit("."), 0)
     n = F.size(cs)
-    pairs = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.struct(
-            F.element_at(cs, i).alias("a"), F.element_at(cs, i + 1).alias("b")
-        ),
-    )
+    pairs = adjacent_pairs(cs, "a", "b")
     ex = (
         vocab.where(n >= 2)
         .select("cnt", F.explode(pairs).alias("p"))
@@ -1290,14 +1279,8 @@ def q258(spark: SparkSession, sf: str) -> DataFrame:
     TakeOrdered(20). Common-word skew on the margin joins is the AQE
     skew-join case."""
     docs = load_table(spark, sf, "documents")
-    w = words("text")
-    n = F.size(w)
-    bg = F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.struct(
-            F.element_at(w, i).alias("w1"), F.element_at(w, i + 1).alias("w2")
-        ),
-    )
+    n = word_count("text")
+    bg = adjacent_pairs(words("text"), "w1", "w2")
     ex = (
         docs.where(n >= 2)
         .select(F.explode(bg).alias("p"))

@@ -541,6 +541,112 @@ def test_minhash_precondition_filter_matches_size_filter(spark):
     )
 
 
+def _inline_shingles(col, k, distinct):
+    """The earlier ``shingles()`` formula, kept as the twin: the word array
+    is referenced inside the gram lambda, so the tokenizer runs once per
+    gram instead of once per row."""
+    from data_engineer_capstone_spark.functions.text import words
+
+    w = words(col)
+    n = F.size(w)
+    idx = F.sequence(F.lit(1), n - (k - 1))
+    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(w, i, k)))
+    if distinct:
+        grams = F.array_distinct(grams)
+    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
+
+
+def test_shingles_bound_words_match_inline_twin(spark):
+    """``shingles()`` tokenizes once per row (the word array is bound to a
+    lambda variable) and must return exactly what the inline formula
+    returns — same grams in the same order, same type — for k in {3,4,5},
+    with and without ``distinct``, on the degenerate inputs: null, empty
+    and punctuation-only text, fewer than k and exactly k words, and
+    repeated words."""
+    from data_engineer_capstone_spark.functions.text import shingles
+
+    rows = [
+        (1, None),
+        (2, ""),
+        (3, " ,.;! -- ?"),
+        (4, "one two"),
+        (5, "one two three"),
+        (6, "One, two; three... four"),
+        (7, "one two three four five"),
+        (8, "a a a a a a a"),
+        (9, "the cat the cat the cat sat on the cat"),
+        (10, " ".join(f"w{i % 7}" for i in range(40))),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    combos = [(k, d) for k in (3, 4, 5) for d in (True, False)]
+    cols = []
+    for k, d in combos:
+        cols.append(shingles("text", k, distinct=d).alias(f"new_{k}_{d}"))
+        cols.append(_inline_shingles(F.col("text"), k, d).alias(f"old_{k}_{d}"))
+    out = docs.select("doc_id", *cols)
+    fields = {f.name: f.dataType for f in out.schema.fields}
+    got = {r.doc_id: r for r in out.collect()}
+    assert len(got) == len(rows)
+    for k, d in combos:
+        assert fields[f"new_{k}_{d}"] == fields[f"old_{k}_{d}"]
+        for doc_id, r in got.items():
+            assert r[f"new_{k}_{d}"] == r[f"old_{k}_{d}"], (doc_id, k, d)
+        # null/empty/punctuation-only and short docs give [], not null
+        for doc_id in (1, 2, 3, 4):
+            assert got[doc_id][f"new_{k}_{d}"] == []
+    assert got[5]["new_3_False"] == ["one two three"]
+    assert got[8]["new_3_True"] == ["a a a"]
+    assert len(got[8]["new_3_False"]) == 5
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The argument text of every ``lambdafunction(...)`` in a plan string,
+    found by balanced parentheses (nested lambdas included)."""
+    tag = "lambdafunction("
+    bodies, start = [], plan.find(tag)
+    while start >= 0:
+        depth, k = 1, start + len(tag)
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[k], 0)
+            k += 1
+        bodies.append(plan[start + len(tag) : k - 1])
+        start = plan.find(tag, start + 1)
+    return bodies
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q92_minhash_lsh_dedup",
+        "q113_curation_pipeline",
+        "q212_repetition_score",
+        "q241_bigram_novelty",
+        "q258_pmi_collocations",
+    ],
+)
+def test_no_tokenizer_inside_lambda_bodies(spark, sf_dir, name):
+    """No lambda body may call the tokenizer: Spark evaluates a lambda body
+    once per array element, so ``regexp_extract_all`` inside one
+    re-tokenizes the document per shingle or bigram (O(words²) per row).
+    Checked on the final optimized plan AND on every plan the query runs
+    while it is built (the materialized signature and shingle tables of
+    q92/q113 live there — the final plan only reads their checkpoints)."""
+    from data_engineer_capstone_spark.plans import get_queries
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    before = store.executionsCount()
+    df = get_queries()[name](spark, sf_dir)
+    plans = [df._jdf.queryExecution().optimizedPlan().toString()]
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    ran = store.executionsCount() - before
+    if ran:
+        execs = store.executionsList(before, ran)
+        plans += [execs.apply(i).physicalPlanDescription() for i in range(execs.size())]
+    bodies = [b for p in plans for b in _lambda_bodies(p)]
+    assert bodies, name  # the guard must see the shingle/bigram lambdas
+    assert not [b for b in bodies if "regexp_extract_all(" in b], name
+
+
 def test_redact_pii_crafted(spark):
     """Redaction order contract: emails swallowed before SSN/phone scan,
     SSN before phone (an SSN tail would otherwise match the phone

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import datetime
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -141,18 +141,20 @@ def test_connected_components_vs_union_find(spark, edge_list):
 
 
 @settings(**SETTINGS)
-@given(st.lists(st.sampled_from("abc"), min_size=0, max_size=12))
+@given(st.none() | st.lists(st.sampled_from("abc"), min_size=0, max_size=12))
+@example(toks=None)
 def test_shingles_count_and_short_doc_guard(spark, toks):
     """k-shingling emits exactly max(0, n-k+1) grams pre-dedup and the
     distinct set is a subset; docs shorter than k emit [] (not the
-    descending-sequence artifact of naive F.sequence)."""
-    text = " ".join(toks)
+    descending-sequence artifact of naive F.sequence), and so does null
+    text (treated as zero words)."""
+    text = None if toks is None else " ".join(toks)
     df = spark.createDataFrame([(text,)], "t string")
     row = df.select(
         F.size(shingles("t", k=3, distinct=False)).alias("all_n"),
         F.size(shingles("t", k=3)).alias("d_n"),
     ).collect()[0]
-    assert row.all_n == max(0, len(toks) - 2)
+    assert row.all_n == max(0, len(toks or []) - 2)
     assert 0 <= row.d_n <= row.all_n
 
 
